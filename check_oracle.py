@@ -57,9 +57,11 @@ def main() -> None:
                     # driver's comparator coerces — match that here
                     v = float(v)
                 if isinstance(v, float):
-                    # bit-level float identity (nan == nan, -0.0 != 0.0)
-                    rr.append(("f", math.inf if v != v else v,
-                               math.copysign(1.0, v)))
+                    # bit-level float identity (-0.0 != 0.0); NaN gets a
+                    # sign-free sentinel equal to every NaN and to nothing
+                    # else (in particular not to +inf or -inf)
+                    rr.append(("nan",) if v != v
+                              else ("f", v, math.copysign(1.0, v)))
                 else:
                     rr.append(v)
             out.append(tuple(rr))

@@ -69,29 +69,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def hyperplane_signature_udf(n_planes: int = 16, seed: int = 42):
-    """Deterministic random-hyperplane LSH signature: bit j =
-    sign(dot(vec, plane_j)), planes from a seeded Gaussian — regenerated
-    identically on every executor from the closure (no stored state).
-    One Arrow batch → one matmul (Charikar 2002 signatures at memory
-    bandwidth, not per-element expression evaluation)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.LongType())
-    def sig(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.stack(vec.to_numpy())            # (n, dim)
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((M.shape[1], n_planes))
-        bits = (M.astype(np.float64) @ planes) > 0   # (n, n_planes)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series(bits.astype(np.int64) @ weights)
-
-    return sig
-
-
 def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """INTEGER-quantized random hyperplanes (round(gauss*1000)): sign bits
     come from exact integer dot products of the quantized vector and the
@@ -129,6 +106,11 @@ def _topk_desc_tiebreak(sims: np.ndarray, ids: np.ndarray, k_eff: int
     before the -inf padding, so argpartition keeps all of them, and
     callers drop the non-finite slots afterwards."""
     c, m = sims.shape
+    # argpartition ranks NaN (a zero-norm vector's 0/0) above every finite
+    # sim; as -inf it sorts with the padding and never evicts a neighbour
+    nan = np.isnan(sims)
+    if nan.any():
+        sims = np.where(nan, -np.inf, sims)
     part = np.argpartition(sims, m - k_eff, axis=-1)[:, m - k_eff:]
     psims = np.take_along_axis(sims, part, axis=-1)
     # order the kept entries exactly: lexsort over (id ASC, sim DESC)
@@ -224,6 +206,11 @@ def quantized_band_struct_udf(n_planes: int, bands: int, scale: int = 1000,
                                  "bv": pd.Series([], dtype=object)})
         M = np.stack(vec.to_numpy()).astype(np.float64)      # (n, dim)
         Q = _round_half_up(M * float(scale))                 # ints in double
+        # the int32 cast below would wrap silently (NaN fails this too)
+        if not ((Q >= -2.0 ** 31) & (Q < 2.0 ** 31)).all():
+            raise ValueError(
+                f"embedding value times scale={scale} is NaN or outside "
+                "the int32 range of the quantized vector")
         planes = lsh_planes(M.shape[1], n_planes, seed)
         bits = (Q @ planes) > 0                              # exact int dots
         weights = 1 << np.arange(rows, dtype=np.int64)

@@ -11,8 +11,9 @@ Pattern (the engine's core, per north_rule):
    computed in one Arrow batch, usually broadcast
 3. equi-join on cell id (hash join; broadcast when the covering fits,
    salted shuffle join otherwise — skew handled *explicitly*)
-4. refine candidates with the exact winding-number PIP kernel in a
-   vectorized pandas UDF (Arrow batches, no per-row Python)
+4. refine candidates with the exact winding-number PIP kernel
+   (``geom.points_in_wkb``) in a vectorized pandas UDF (Arrow batches,
+   no per-row Python) — the one refine implementation on every join path
 
 At 100 TB the point side never moves twice: one projection to add the cell
 column, one (broadcast) join, one Arrow-batched refine. No driver collect.
@@ -99,7 +100,16 @@ def polygon_covering_cells_driver(
     local pandas frame, so the point side can key itself at every res the
     covering actually uses (coarsened large-ROI rows included) without an
     extra Spark job."""
-    pdf = polygons.toPandas()
+    return _covering_from_pdf(polygons, polygons.toPandas(), wkb_col, res,
+                              max_cells_per_polygon)
+
+
+def _covering_from_pdf(
+    polygons: DataFrame, pdf: "pd.DataFrame", wkb_col: str = "geometry_wkb",
+    res: int = DEFAULT_RES, max_cells_per_polygon: int = 4096,
+) -> tuple[DataFrame, list[int]]:
+    """``polygon_covering_cells_driver`` over an already collected
+    ``polygons.toPandas()`` frame, for callers that need that frame too."""
     cover_pdf = _polygon_covering_pdf(pdf, wkb_col, res, max_cells_per_polygon)
     levels = C.res_levels_of_cells(cover_pdf["cell"].to_numpy()) or [res]
     spark = polygons.sparkSession
@@ -124,84 +134,6 @@ def polygon_covering_cells(
     schema = T.StructType(
         [T.StructField("cell", T.LongType())] + list(polygons.schema.fields))
     return polygons.mapInPandas(gen, schema=schema)
-
-
-def _pip_ring_expr(px, py, ring: np.ndarray):
-    """Crossing-number test for one closed ring as a pure column
-    expression — the EXACT arithmetic of ``geom.points_in_ring`` compiled
-    per edge: ``cond = (y0 <= py) != (y1 <= py)`` and
-    ``px < x0 + (py - y0) * dx / dy`` with dx/dy precomputed in float64
-    (the same subtractions numpy performs), same op order, so every
-    comparison is bit-identical to the kernel. Horizontal edges are
-    skipped (``cond`` is identically false for them — numpy reaches the
-    same result through its inf-divisor guard). Returns (expr, n_edges)."""
-    x0s, y0s = ring[:-1, 0], ring[:-1, 1]
-    x1s, y1s = ring[1:, 0], ring[1:, 1]
-    crossings = None
-    n = 0
-    for x0, y0, x1, y1 in zip(x0s, y0s, x1s, y1s):
-        if y0 == y1:
-            continue
-        dx = float(x1 - x0)
-        dy = float(y1 - y0)
-        cond = ((F.lit(float(y0)) <= py) != (F.lit(float(y1)) <= py)) & (
-            px < F.lit(float(x0)) + (py - F.lit(float(y0)))
-            * F.lit(dx) / F.lit(dy))
-        c = F.when(cond, 1).otherwise(0)
-        crossings = c if crossings is None else crossings + c
-        n += 1
-    if crossings is None:
-        return F.lit(False), 0
-    return (crossings % 2) == 1, n
-
-
-def _pip_polys_expr(px, py, polys: list[list[np.ndarray]]):
-    """``geom.points_in_multipolygon`` as a column expression: OR over
-    polygons of (exterior ring & ~holes). Returns (expr, n_edges)."""
-    def _closed(r: np.ndarray) -> np.ndarray:
-        return r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
-
-    out = None
-    total = 0
-    for rings in polys:
-        e, n = _pip_ring_expr(px, py, _closed(np.asarray(rings[0])))
-        total += n
-        for hole in rings[1:]:
-            he, hn = _pip_ring_expr(px, py, _closed(np.asarray(hole)))
-            e = e & ~he
-            total += hn
-        out = e if out is None else out | e
-    return (F.lit(False) if out is None else out), total
-
-
-def pip_filter_expr(px, py, pid_col, wkb_map: dict,
-                    max_edges: int = 512):
-    """The whole broadcast-path PIP refine as ONE JVM expression (a
-    polygon_id CASE over per-polygon crossing tests), or None when the
-    polygon set is too big to inline (edge budget keeps the generated
-    method well under janino limits — the caller falls back to the Arrow
-    kernel).
-
-    Guide §4: the refine predicate was the only Python boundary in the
-    point/vert spatial joins — every candidate row crossed JVM→Arrow→
-    pandas and back just to evaluate a handful of edge comparisons. As a
-    codegen'd expression the filter fuses into the scan/join stage
-    (measured at sf1.0: points_in_polygons 0.94 s → ~0.55 s,
-    ArrowEvalPython gone from the plan). The kernel path stays the
-    implementation for polygon sets beyond the inlining budget."""
-    total = 0
-    expr = None
-    for pid, wkb in wkb_map.items():
-        polys = geom.wkb_to_rings(bytes(wkb))
-        e, n = _pip_polys_expr(px, py, polys)
-        total += n
-        if total > max_edges:
-            return None
-        expr = (F.when(pid_col == F.lit(pid), e) if expr is None
-                else expr.when(pid_col == F.lit(pid), e))
-    if expr is None:
-        return F.lit(False)
-    return expr.otherwise(F.lit(False))
 
 
 @pandas_udf(T.BooleanType())
@@ -358,27 +290,23 @@ def points_in_polygons(
 
     Output = point columns + polygon columns (minus wkb/cell plumbing).
 
-    Broadcast path ships polygon geometry to executors ONCE as a
-    {polygon_id: wkb} broadcast dict — candidate rows carry only the id,
-    not a duplicated WKB blob per row (10-100× less Arrow traffic at
-    scale). Salted/shuffle paths keep the wkb column (the polygon side is
-    too big to broadcast there by definition).
+    Every path refines its candidates once, with the winding-number
+    kernel over Arrow batches. The broadcast path ships polygon geometry
+    to executors ONCE as a {polygon_id: wkb} broadcast dict — candidate
+    rows carry only the id, not a duplicated WKB blob per row (10-100×
+    less Arrow traffic at scale). Salted/shuffle paths keep the wkb column
+    (the polygon side is too big to broadcast there by definition).
     """
     if broadcast_covering and salt_factor is None:
-        cover, levels = polygon_covering_cells_driver(polygons, res=res)
+        # one driver action over the polygon side feeds both the covering
+        # and the {polygon_id: wkb} map the refine looks geometry up in
+        pdf = polygons.toPandas()
+        cover, levels = _covering_from_pdf(polygons, pdf, res=res)
         pts = with_cell_multires(points, x, y, levels)
-        wkb_map = {row[0]: bytes(row[1]) for row in
-                   polygons.select(polygon_id_col, "geometry_wkb").collect()}
+        wkb_map = dict(zip(pdf[polygon_id_col].tolist(),
+                           map(bytes, pdf["geometry_wkb"])))
         cand = pts.join(
             F.broadcast(cover.drop("geometry_wkb")), "cell")
-
-        # small polygon sets compile to a pure JVM predicate (bit-exact
-        # twin of the winding kernel) — no Python boundary in the refine
-        expr = pip_filter_expr(F.col(x), F.col(y), F.col(polygon_id_col),
-                               wkb_map)
-        if expr is not None:
-            return cand.filter(expr).drop("cell")
-
         bc = points.sparkSession.sparkContext.broadcast(wkb_map)
 
         @pandas_udf(T.BooleanType())

@@ -41,6 +41,15 @@ class TestTopkDescTiebreak:
         got = SIM._topk_desc_tiebreak(sims, ids, 3)
         assert [ids[j] for j in got[0]] == [10, 20, 3]
 
+    def test_nan_never_evicts_a_finite_neighbour(self):
+        """A zero-norm vector's sims are NaN (0/0); argpartition ranks NaN
+        above every finite value, so unmasked it would take a top-k slot."""
+        sims = np.array([[0.9, np.nan, 0.8, 0.1, -np.inf]])
+        ids = np.array([1, 2, 3, 4, 5])
+        got = SIM._topk_desc_tiebreak(sims, ids, 2)
+        assert [sims[0, j] for j in got[0]] == [0.9, 0.8]
+        assert [ids[j] for j in got[0]] == [1, 3]
+
 
 class TestRoundHalfUp:
     def test_matches_spark_round_semantics(self):
@@ -77,56 +86,13 @@ class TestQuantizedBinaryPack:
             assert list(unpacked) == list(r["qv_jvm"]), vid
             assert list(r["s"]["bv"]) == list(r["bv_ref"]), vid
 
-
-class TestPipExprEquivalence:
-    def test_expr_matches_numpy_kernel(self, spark):
-        """The compiled JVM PIP predicate must agree with the winding
-        kernel on random concave polygons with holes, including points
-        landing near edges."""
-        from geograypher_spark.functions import geometry as geom
-        from geograypher_spark.operators.spatial_join import pip_filter_expr
-        from pyspark.sql import functions as F
-
-        rng = np.random.default_rng(7)
-        wkb_map = {}
-        polys_by_pid = {}
-        for pid in range(3):
-            # star-ish concave ring around a random center
-            ang = np.sort(rng.uniform(0, 2 * np.pi, 9))
-            rad = rng.uniform(1.0, 4.0, 9)
-            cx, cy = rng.uniform(3, 7, 2)
-            ring = np.stack([cx + rad * np.cos(ang),
-                             cy + rad * np.sin(ang)], axis=1)
-            hole = ring.mean(axis=0) + (ring - ring.mean(axis=0)) * 0.2
-            rings = [ring, hole[::-1]]
-            wkb_map[pid] = geom.polygon_to_wkb(rings)
-            polys_by_pid[pid] = geom.wkb_to_rings(wkb_map[pid])
-        pts = rng.uniform(-1, 11, size=(400, 2))
-        rows = [(int(i % 3), float(px), float(py))
-                for i, (px, py) in enumerate(pts)]
-        df = spark.createDataFrame(rows, "polygon_id int, x double, y double")
-        expr = pip_filter_expr(F.col("x"), F.col("y"), F.col("polygon_id"),
-                               wkb_map)
-        assert expr is not None
-        got = {(r["polygon_id"], r["x"], r["y"])
-               for r in df.filter(expr).collect()}
-        expect = set()
-        for pid, px, py in rows:
-            if geom.points_in_multipolygon(
-                    np.array([px]), np.array([py]), polys_by_pid[pid])[0]:
-                expect.add((pid, px, py))
-        assert got == expect and len(expect) > 10
-
-    def test_large_polygon_sets_fall_back(self, spark):
-        from geograypher_spark.functions import geometry as geom
-        from geograypher_spark.operators.spatial_join import pip_filter_expr
-        from pyspark.sql import functions as F
-
-        ring = np.array([[0, 0], [1, 0], [1, 1], [0, 1]], dtype=float)
-        wkb = geom.polygon_to_wkb([ring])
-        big = {i: wkb for i in range(300)}  # 300 polys x 2 crossing edges
-        assert pip_filter_expr(F.col("x"), F.col("y"),
-                               F.col("polygon_id"), big) is None
+    def test_struct_udf_rejects_values_outside_int32(self, spark):
+        """|x| * scale >= 2^31 would wrap in the int32 cast; it must raise."""
+        emb = spark.createDataFrame(
+            [(0, [0.5] * 15 + [3.0e6])], "vec_id long, embedding array<float>")
+        qb = SIM.quantized_band_struct_udf(8, 4, 1000)
+        with pytest.raises(Exception, match="int32 range"):
+            emb.select(qb(F.col("embedding"))).collect()
 
 
 class TestHashedJaccardParity:
