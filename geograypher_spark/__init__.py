@@ -4,7 +4,7 @@ Re-expresses the capabilities of ``open-forest-observatory/geograypher``
 (drone-image → 3D mesh → geospatial prediction pipelines) as distributed
 Spark DataFrame operators:
 
-- grid/H3-style cell encoding and cell-prefix hash joins (salted for skew)
+- grid/H3-style cell encoding and cell-prefix hash joins (skew left to AQE)
 - exact point-in-polygon refinement (vectorized winding-number on WKB)
 - z-buffer visibility joins (camera ↔ mesh-face assignment)
 - cell-ring kNN joins, blocked ray-pair theta self-joins, graph components

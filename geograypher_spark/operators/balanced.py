@@ -11,28 +11,24 @@ the right default for scan/join stages; it is the wrong cost model for
 CPU-dense Python stages.
 
 ``grouped_apply_balanced`` keeps the same (key, pdf) → pdf contract as
-``DataFrame.groupBy(...).applyInPandas`` but controls the exchange:
+``DataFrame.groupBy(...).applyInPandas`` but controls the exchange for a
+key domain the caller already knows (the broadcast camera dict, the tile
+grid): with a group count within ~2 orders of magnitude of the core
+count, hash assignment is Poisson-skewed and one straggler partition caps
+the whole stage. So the groups are striped round-robin across exactly
+``p`` buckets, and the rows repartition on a *bucket key chosen so
+Spark's own hash places bucket b in partition b* (Murmur3 inverted
+driver-side, see ``inverse_bucket_keys``). Every partition gets
+⌈groups/p⌉ or ⌊groups/p⌋ groups — no birthday-problem collisions. The
+group function runs inside ``mapInPandas`` with an in-task pandas
+groupby (a post-repartition ``applyInPandas`` would re-shuffle on the
+raw keys and undo the balancing).
 
-- **volume regime** (many groups): an explicit ``repartition(p, keys)``
-  — user-specified repartitions are exempt from AQE coalescing, and with
-  groups ≫ partitions the hash assignment is balanced by the law of
-  large numbers. ``applyInPandas`` then reuses that exchange (its
-  ClusteredDistribution on the same keys is already satisfied).
-- **enumeration regime** (group count within ~2 orders of magnitude of
-  the core count — where hash assignment is Poisson-skewed and one
-  straggler partition caps the whole stage): enumerate the distinct
-  groups (tiny, map-side-combined distinct), stripe them round-robin
-  across exactly ``p`` buckets, and repartition on a *bucket key chosen
-  so Spark's own hash places bucket b in partition b* (Murmur3 inverted
-  driver-side, see ``inverse_bucket_keys``). Every partition gets
-  ⌈groups/p⌉ or ⌊groups/p⌋ groups — no birthday-problem collisions.
-  The group function runs inside ``mapInPandas`` with an in-task pandas
-  groupby (a post-repartition ``applyInPandas`` would re-shuffle on the
-  raw keys and undo the balancing).
-
-At 100 TB the volume regime is the norm; the enumeration regime is what
-keeps the LAST reduction of a pipeline — hundreds of tiles/cameras on
-hundreds of cores — from being bound by one unlucky hash bucket.
+This is what keeps the LAST reduction of a pipeline — hundreds of
+tiles/cameras on hundreds of cores — from being bound by one unlucky
+hash bucket. Data-dependent keys that are numerous by construction need
+no routing table: a plain ``repartition(p, keys)`` is balanced by volume
+and, being user-specified, exempt from AQE coalescing.
 """
 
 from __future__ import annotations
@@ -112,7 +108,7 @@ def inverse_bucket_keys(p: int) -> list[int]:
 # ---------------------------------------------------------------------------
 
 def auto_partitions(p: int, n_groups: int) -> int:
-    """Bucket-count rule for the enumeration regime. With ≥ ~16 groups
+    """Bucket-count rule for the balanced exchange. With ≥ ~16 groups
     per bucket the content-hash striping averages per-group cost noise
     away and the 4-wave default is the overhead sweet spot (measured:
     2700 tiles at 64 buckets scale cleanly; doubling buckets cost +14%
@@ -142,72 +138,37 @@ def grouped_apply_balanced(
     keys: Sequence[str],
     fn: Callable[[tuple, pd.DataFrame], pd.DataFrame],
     schema,
-    partitions: int | None = None,
-    max_enumerated_groups: int = 100_000,
-    groups: Sequence[tuple] | None = None,
-    volume: bool = False,
+    groups: Sequence[tuple],
 ) -> DataFrame:
     """``df.groupBy(*keys).applyInPandas(fn, schema)`` with a
-    compute-aware exchange (see module docstring).
+    compute-aware exchange (see module docstring). Starts no Spark action.
 
     ``fn(key_tuple, pdf) -> pdf`` — identical contract to applyInPandas;
     ``pdf`` contains the full rows including the key columns.
 
-    ``partitions`` defaults to 4× the session's default parallelism —
+    ``groups`` is the key domain, known to the caller (e.g. a broadcast
+    camera dict). A superset is fine: empty buckets cost nothing, and
+    keys with no rows produce no output, exactly like applyInPandas.
+    Keys MISSING from ``groups`` — and null-valued keys, which no
+    equi-join matches — are still processed, routed to a shared fallback
+    bucket.
+
+    The bucket count starts at 4× the session's default parallelism —
     round-robin assignment is exact, so a handful of waves absorbs
     group-cost variance, and four waves halve the last-wave straggler
     tail a two-wave schedule pays (measured ~8% of stage wall on the
     576-camera render at 2×) while per-task Python-worker overhead
-    stays negligible (workers are reused across tasks). In the
-    enumeration regime the default is additionally raised by
-    ``auto_partitions`` when the group domain is thin relative to the
-    bucket count (high per-group cost variance stops averaging out —
-    see its docstring for the measurements); an explicit ``partitions``
-    is always respected verbatim. Groups are atomic: one group's rows always land
-    in one task, so per-task memory is bounded by the largest
-    ⌈groups/partitions⌉ groups (enumeration regime) or by the streamed
-    single group (volume regime).
-
-    Group enumeration pulls at most ``max_enumerated_groups`` distinct
-    keys to the driver in one action; beyond that the group count alone
-    guarantees hash balance and the volume path is used. When ``df`` is
-    itself expensive to compute, that probe action re-runs its lineage —
-    callers that already know the key domain (e.g. a broadcast camera
-    dict) should pass ``groups`` (a superset is fine: empty buckets cost
-    nothing, and keys with no rows produce no output, exactly like
-    applyInPandas; keys MISSING from ``groups`` — and null-valued keys,
-    which no equi-join matches — are still processed, routed to a
-    shared fallback bucket). ``volume=True`` skips the probe and goes
-    straight to
-    the hash-routed path — right for chained stages whose group count is
-    known to be large but whose keys are data-dependent.
+    stays negligible (workers are reused across tasks). ``auto_partitions``
+    then adjusts it to the group count (see its docstring for the
+    measurements). Groups are atomic: one group's rows always land in one
+    task, so per-task memory is bounded by the largest ⌈groups/partitions⌉
+    groups.
     """
     keys = list(keys)
     spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    p = partitions or max(par * 4, 8)
-
-    # ONE extra action: pull the distinct groups if there are few enough
-    # to enumerate (map-side-combined distinct, tiny result). Everything
-    # else — round-robin assignment, placement inversion — happens on the
-    # driver, so no count job and no single-partition window stage.
-    cap = max_enumerated_groups
-    if volume and groups is None:
-        return (df.repartition(p, *keys)
-                  .groupBy(*keys).applyInPandas(fn, schema=schema))
-    if groups is not None:
-        head = [tuple(g) if isinstance(g, (tuple, list)) else (g,)
-                for g in groups]
-    else:
-        head = df.select(*keys).distinct().take(cap + 1)
-    if not head:
-        return spark.createDataFrame([], schema)
-    if len(head) > cap:
-        return (df.repartition(p, *keys)
-                  .groupBy(*keys).applyInPandas(fn, schema=schema))
-
-    if partitions is None:
-        p = auto_partitions(p, len(head))
+    domain = [tuple(g) for g in groups]
+    p = auto_partitions(
+        max(spark.sparkContext.defaultParallelism * 4, 8), len(domain))
     inv = inverse_bucket_keys(p)
     # stripe in content-hash order, not key order: group cost usually
     # varies smoothly with the natural key (neighboring cameras/tiles see
@@ -222,7 +183,7 @@ def grouped_apply_balanced(
     # of the routing table (they reach the fallback bucket below) so the
     # assign DataFrame stays cleanly typed
     rows = sorted(
-        (tuple(r) for r in head if not any(v is None for v in r)),
+        (r for r in domain if not any(v is None for v in r)),
         key=lambda r: hashlib.md5(repr(r).encode()).digest())
     assign = spark.createDataFrame(
         pd.DataFrame(

@@ -10,7 +10,8 @@ Pattern (the engine's core, per north_rule):
 2. cover each polygon with cells at the same resolution — small side,
    computed in one Arrow batch, usually broadcast
 3. equi-join on cell id (hash join; broadcast when the covering fits,
-   salted shuffle join otherwise — skew handled *explicitly*)
+   plain shuffle join otherwise, where skew is left to AQE's skew join,
+   on in ``session.py``)
 4. refine candidates with the exact winding-number PIP kernel
    (``geom.points_in_wkb``) in a vectorized pandas UDF (Arrow batches,
    no per-row Python) — the one refine implementation on every join path
@@ -150,48 +151,6 @@ def pip_udf(x: pd.Series, y: pd.Series, wkb: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def choose_salt_factor(
-    df: DataFrame, key: str = "cell",
-    target_rows_per_task: int = 200_000, cap: int = 64,
-) -> int:
-    """Salting factor from the key histogram (north_rule: skew handled
-    EXPLICITLY, AQE as backstop). Forest plots concentrate faces in a few
-    cells; the hottest key's row count divided by a per-task budget gives
-    the number of salt shards needed to level it. One cheap agg job."""
-    row = (
-        df.groupBy(key).count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"))
-        .collect()[0]
-    )
-    mx = int(row["mx"] or 0)
-    avg = float(row["avg"] or 1.0)
-    # no salting unless the hottest key is both big and skewed
-    if mx <= target_rows_per_task or mx <= 4 * avg:
-        return 1
-    import math
-
-    return min(cap, math.ceil(mx / target_rows_per_task))
-
-
-def salted_equi_join(
-    big: DataFrame, small: DataFrame, key: str, salt_factor: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Shuffle equi-join with explicit salting for skewed keys (north_rule).
-
-    The big side gets a deterministic salt derived from its whole row hash;
-    the small side is exploded ×salt_factor. Use when the small side exceeds
-    broadcast threshold AND key histogram is skewed (forest plots concentrate
-    faces in few cells). AQE skew-join remains on as backstop.
-    """
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_factor)).cast("int"))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1))))
-    joined = big_s.join(small_s, on=[key, "_salt"], how=how)
-    return joined.drop("_salt")
-
-
 @pandas_udf(T.DoubleType())
 def overlap_area_udf(
     x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
@@ -230,7 +189,6 @@ def triangles_polygon_overlap(
     polygons: DataFrame,
     res: int = DEFAULT_RES,
     broadcast_covering: bool = True,
-    salt_factor: int | None = None,
     min_area: float = 1e-9,
 ) -> DataFrame:
     """Candidate cell join (triangle bbox covering × polygon covering) +
@@ -244,7 +202,7 @@ def triangles_polygon_overlap(
 
     ``faces`` needs columns x0..y2 (triangle 2D coords) plus any keys.
     """
-    if broadcast_covering and salt_factor is None:
+    if broadcast_covering:
         cover, levels = polygon_covering_cells_driver(polygons, res=res)
     else:
         cover = polygon_covering_cells(polygons, res=res)
@@ -259,10 +217,8 @@ def triangles_polygon_overlap(
     fymin = F.least("y0", "y1", "y2"); fymax = F.greatest("y0", "y1", "y2")
     cells = C.multires_bbox_cells_col(fxmin, fymin, fxmax, fymax, levels)
     tri_cells = faces.withColumn("cell", F.explode(cells))
-    if broadcast_covering and salt_factor is None:
+    if broadcast_covering:
         cand = tri_cells.join(F.broadcast(cover), "cell")
-    elif salt_factor:
-        cand = salted_equi_join(tri_cells, cover, "cell", salt_factor)
     else:
         cand = tri_cells.join(cover, "cell")
     # a (face, polygon) pair can match in several cells → dedup before the
@@ -283,7 +239,6 @@ def points_in_polygons(
     point_keys: list[str] | None = None,
     res: int = DEFAULT_RES,
     broadcast_covering: bool = True,
-    salt_factor: int | None = None,
     polygon_id_col: str = "polygon_id",
 ) -> DataFrame:
     """Inner join: each point row × each polygon containing it.
@@ -294,10 +249,10 @@ def points_in_polygons(
     kernel over Arrow batches. The broadcast path ships polygon geometry
     to executors ONCE as a {polygon_id: wkb} broadcast dict — candidate
     rows carry only the id, not a duplicated WKB blob per row (10-100×
-    less Arrow traffic at scale). Salted/shuffle paths keep the wkb column
+    less Arrow traffic at scale). The shuffle path keeps the wkb column
     (the polygon side is too big to broadcast there by definition).
     """
-    if broadcast_covering and salt_factor is None:
+    if broadcast_covering:
         # one driver action over the polygon side feeds both the covering
         # and the {polygon_id: wkb} map the refine looks geometry up in
         pdf = polygons.toPandas()
@@ -322,13 +277,8 @@ def points_in_polygons(
 
         refined = cand.filter(pip_by_id(F.col(x), F.col(y), F.col(polygon_id_col)))
         return refined.drop("cell")
-    elif salt_factor:
-        cover = polygon_covering_cells(polygons, res=res)
-        pts = with_cell_multires(points, x, y, covering_res_levels(cover) or [res])
-        cand = salted_equi_join(pts, cover, "cell", salt_factor)
-    else:
-        cover = polygon_covering_cells(polygons, res=res)
-        pts = with_cell_multires(points, x, y, covering_res_levels(cover) or [res])
-        cand = pts.join(cover, "cell")
+    cover = polygon_covering_cells(polygons, res=res)
+    pts = with_cell_multires(points, x, y, covering_res_levels(cover) or [res])
+    cand = pts.join(cover, "cell")
     refined = cand.filter(pip_udf(F.col(x), F.col(y), F.col("geometry_wkb")))
     return refined.drop("cell", "geometry_wkb")

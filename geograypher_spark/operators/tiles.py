@@ -179,17 +179,23 @@ def rasterize_face_labels(
 
     ``bounds`` = world (xmin, ymin, xmax, ymax) of the scene when known
     (table stats / fixture constants): the tile-key domain is then derived
-    driver-side and the balanced exchange skips its group-enumeration
-    probe — an extra Spark action that would otherwise re-scan the full
+    driver-side. Without it, one min/max aggregation over the tiled faces
+    finds the tile-key rectangle — an extra Spark action that re-scans the
     exploded faces lineage before the real job (round-4 ADVICE).
     """
     from .balanced import grouped_apply_balanced
 
-    groups = tile_keys_for_bounds(grid, bounds) if bounds else None
-
     tiled = faces.withColumn("_t", F.explode(_tile_cover_cols(grid))) \
                  .withColumn("tile_x", F.col("_t.tx")) \
                  .withColumn("tile_y", F.col("_t.ty")).drop("_t")
+    if bounds:
+        groups = tile_keys_for_bounds(grid, bounds)
+    else:
+        r = tiled.agg(F.min("tile_x"), F.max("tile_x"),
+                      F.min("tile_y"), F.max("tile_y")).first()
+        groups = [] if r[0] is None else [
+            (tx, ty) for tx in range(r[0], r[1] + 1)
+            for ty in range(r[2], r[3] + 1)]
 
     # tile renders are compute-dense (~50 ms of kernel per ~80 KB group):
     # route through the balanced grouped-apply so the render stage keeps

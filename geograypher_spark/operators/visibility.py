@@ -5,10 +5,11 @@ Reference J1 (``meshes/meshes.py:1645-1823``): off-screen VTK rendering of
 faces colored with base-256-encoded ids, screenshot, decode. Here instead:
 
 1. **Candidate stage** — camera frustum-footprint covering cells ⋈ face
-   bbox covering cells (cell equi-join, broadcast cameras when few, salted
-   otherwise). Keeps the per-camera rasterizer input bounded: each camera
-   sees only faces its frustum can reach, the Spark analog of the
-   reference's per-cluster submeshes (J12).
+   bbox covering cells (cell equi-join; the camera covering is computed
+   driver-side from the collected camera table and broadcast). Keeps the
+   per-camera rasterizer input bounded: each camera sees only faces its
+   frustum can reach, the Spark analog of the reference's per-cluster
+   submeshes (J12).
 2. **Rasterize stage** — ``applyInPandas`` grouped by camera_id: software
    z-buffer with perspective-correct depth (linear 1/z in screen space),
    pixel-center sampling. Emits ``(camera_id, face_id, pixel_count)``
@@ -18,8 +19,6 @@ No GPU, no VTK, no base-256 trick (X9) — face ids stay int64 end to end.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -38,9 +37,8 @@ FACE_COORD_COLS = ["x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2"]
 # PER-CORE cache share, not the whole LLC. Measured pinned at 16
 # concurrent renders: 65536 (≈5 MB of temporaries) beats 262144 (≈20 MB)
 # by 10-25% on both the ortho tile and perspective camera workloads, and
-# costs nothing at 4 cores. Overridable for re-tuning on other hardware.
-_CHUNK_SAMPLES = int(__import__("os").environ.get(
-    "SPARK_GRAFT_RASTER_CHUNK", "65536"))
+# costs nothing at 4 cores.
+_CHUNK_SAMPLES = 65536
 
 
 # ---------------------------------------------------------------------------
@@ -352,57 +350,42 @@ def _footprint_bboxes(
     return any_valid, xmin, ymin, xmax, ymax
 
 
-def camera_footprint_cells(
-    cameras: DataFrame, z_min: float, z_max: float,
-    res: int, max_cells: int = 4096,
-) -> DataFrame:
-    """(camera cols..., cell): covering cells of each camera's frustum
-    footprint over the mesh z-slab [z_min, z_max] — corner rays intersected
-    with both planes, bbox of the 8 hits, covered at ``res``."""
-    cols = cameras.columns
+# Cap on the camera rows one driver collect may pull (the footprint
+# covering and the broadcast render params each collect the camera table).
+# A collected camera row holds ~1 KB of Python objects (a 16-float
+# transform plus intrinsics), so the cap bounds one collect near 100 MB of
+# an 8 GB driver. Drone surveys have 10^2-10^4 images; a camera table over
+# the cap is more likely the wrong table than a real survey, and an error
+# naming the cap beats a driver out-of-memory.
+_MAX_COLLECTED_CAMERAS = 100_000
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"cell": pd.Series([], dtype="int64"),
-                     **{c: pd.Series([], dtype=object) for c in cols}})
-                continue
-            ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
-                np.stack(pdf["cam_to_world"].to_numpy()),
-                pdf["f"].to_numpy(np.float64),
-                pdf["cx"].to_numpy(np.float64), pdf["cy"].to_numpy(np.float64),
-                pdf["w"].to_numpy(np.float64), pdf["h"].to_numpy(np.float64),
-                z_min, z_max)
-            # batch emission: all cells of the batch in one np.repeat
-            # gather instead of a per-camera DataFrame append
-            keep = np.nonzero(ok)[0]
-            cells, counts = C.covering_cells_batch(
-                xmin[keep], ymin[keep], xmax[keep], ymax[keep],
-                res, max_cells=max_cells)
-            o = pdf.iloc[np.repeat(keep, counts)].reset_index(drop=True)
-            o.insert(0, "cell", cells)
-            yield o
 
-    schema = T.StructType(
-        [T.StructField("cell", T.LongType())] + list(cameras.schema.fields))
-    return cameras.mapInPandas(gen, schema=schema)
+def _collect_cameras(cameras: DataFrame) -> list:
+    """``cameras.collect()`` that raises ``ValueError`` instead of pulling
+    more than ``_MAX_COLLECTED_CAMERAS`` rows to the driver."""
+    rows = cameras.limit(_MAX_COLLECTED_CAMERAS + 1).collect()
+    if len(rows) > _MAX_COLLECTED_CAMERAS:
+        raise ValueError(
+            f"camera table has more than {_MAX_COLLECTED_CAMERAS} rows, the "
+            "cap on camera rows collected to the driver")
+    return rows
 
 
 def camera_footprint_cells_driver(
     cameras: DataFrame, z_min: float, z_max: float,
     res: int, max_cells: int = 4096,
 ) -> tuple[DataFrame, list[int]]:
-    """Driver-side footprint covering for the BROADCAST path: the camera
-    table is the broadcast side by definition (it's also collected for the
-    render params), so covering it locally removes a python mapInPandas
-    stage from every downstream action.
+    """(camera cols..., cell): covering cells of each camera's frustum
+    footprint over the mesh z-slab [z_min, z_max] — corner rays intersected
+    with both planes, bbox of the 8 hits, covered at ``res``. Computed on
+    the driver: the camera table is the broadcast side by definition (it
+    is also collected for the render params).
 
     Returns ``(covering_df, res_levels)``: an oblique camera whose footprint
     bbox exceeds ``max_cells`` coarsens its covering (see
     ``covering_cells_np``), so the face side must key itself at every
     resolution the covering actually uses."""
-    rows = cameras.collect()
+    rows = _collect_cameras(cameras)
     out = {"cell": [], **{c: [] for c in cameras.columns}}
     if rows:
         ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
@@ -432,7 +415,6 @@ def camera_footprint_cells_driver(
 
 def candidate_camera_faces(
     cameras: DataFrame, faces: DataFrame, res: int = 4,
-    broadcast_cameras: bool = True, salt_factor: int | None = None,
     max_cells: int = 4096, z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Cell equi-join of camera footprints × face BBOX covering cells →
@@ -454,14 +436,8 @@ def candidate_camera_faces(
             F.max(F.greatest("z0", "z1", "z2")).alias("zmax"),
         ).collect()[0]
         z_range = (float(zstats["zmin"]), float(zstats["zmax"]))
-    if broadcast_cameras and salt_factor is None:
-        cam_cells, levels = camera_footprint_cells_driver(
-            cameras, z_range[0], z_range[1], res, max_cells=max_cells)
-    else:
-        cam_cells = camera_footprint_cells(
-            cameras, z_range[0], z_range[1], res, max_cells=max_cells)
-        from .spatial_join import covering_res_levels
-        levels = covering_res_levels(cam_cells) or [res]
+    cam_cells, levels = camera_footprint_cells_driver(
+        cameras, z_range[0], z_range[1], res, max_cells=max_cells)
     # face centroid cx/cy collides with the camera principal point cx/cy —
     # only the bbox is needed for the cell key, so drop centroids after
     fxmin = F.least("x0", "x1", "x2"); fxmax = F.greatest("x0", "x1", "x2")
@@ -470,13 +446,7 @@ def candidate_camera_faces(
         "cell", F.explode(C.multires_bbox_cells_col(fxmin, fymin, fxmax, fymax,
                                                     levels))
     ).drop("cx", "cy", "cz")
-    if broadcast_cameras and salt_factor is None:
-        cand = face_cells.join(F.broadcast(cam_cells), "cell")
-    elif salt_factor:
-        from .spatial_join import salted_equi_join
-        cand = salted_equi_join(face_cells, cam_cells, "cell", salt_factor)
-    else:
-        cand = face_cells.join(cam_cells, "cell")
+    cand = face_cells.join(F.broadcast(cam_cells), "cell")
     # a face bbox spanning k covering cells of one camera yields k copies of
     # the (camera, face) pair. The z-buffer rasterizer is idempotent per
     # face (strict depth-<, deterministic face_id order), so duplicates are
@@ -499,7 +469,7 @@ VISIBILITY_SCHEMA = T.StructType([
 _CAM_PARAM_KEYS = ("cam_to_world", "f", "cx", "cy", "w", "h")
 
 
-def _broadcast_cameras(cameras: DataFrame):
+def _broadcast_camera_params(cameras: DataFrame):
     """Camera params as a broadcast dict {camera_id: params}. The camera
     table is the small side of the visibility join by design (thousands of
     rows vs billions of faces); candidate rows then carry only ids+coords.
@@ -516,7 +486,7 @@ def _broadcast_cameras(cameras: DataFrame):
             return {k: x for k, x in v.asDict().items() if x is not None}
         return v                    # MapType already collects as dict
 
-    rows = cameras.select("camera_id", *keys).collect()
+    rows = _collect_cameras(cameras.select("camera_id", *keys))
     cam_map = {
         int(r["camera_id"]): {k: _plain(r[k]) for k in keys} for r in rows}
     return cameras.sparkSession.sparkContext.broadcast(cam_map)
@@ -550,7 +520,6 @@ _PARTIAL_SCHEMA = T.StructType([
 def visibility_join(
     cameras: DataFrame, faces: DataFrame,
     res: int = 4, scale: float = 1.0,
-    salt_factor: int | None = None,
     max_cells: int = 4096, z_range: tuple[float, float] | None = None,
     split_res_delta: int = 0, distortion_mode: str = "vertex",
 ) -> DataFrame:
@@ -575,10 +544,9 @@ def visibility_join(
     ``"warp"``) and the per-camera merge applies the inverse-distortion
     remap exactly once, so split and non-split agree bit-for-bit."""
     cand = candidate_camera_faces(
-        cameras, faces, res=res, salt_factor=salt_factor,
-        max_cells=max_cells, z_range=z_range,
+        cameras, faces, res=res, max_cells=max_cells, z_range=z_range,
     ).select("camera_id", "face_id", *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
+    bc = _broadcast_camera_params(cameras)
 
     from .balanced import grouped_apply_balanced
 
@@ -592,8 +560,7 @@ def visibility_join(
         # z-buffer kernel per group): the balanced grouped-apply keeps the
         # render stage at one task per camera stripe instead of the
         # handful AQE's byte-based coalescing leaves. The key domain is
-        # the broadcast camera dict — no probe action on the candidate
-        # join lineage.
+        # the broadcast camera dict.
         return grouped_apply_balanced(
             cand, ["camera_id"], agg, VISIBILITY_SCHEMA,
             groups=[(int(cid),) for cid in bc.value])
@@ -636,11 +603,14 @@ def visibility_join(
             "depths": [depth[y0:y1, x0:x1].astype("<f8").tobytes()]})
 
     # (camera, sub-cell) keys are data-dependent and numerous by
-    # construction (the split path exists for cameras << cores) — skip
-    # the enumeration probe, hash routing is balanced by volume
-    partials = grouped_apply_balanced(
-        cand, ["camera_id", "_sub"], render_partial, _PARTIAL_SCHEMA,
-        volume=True)
+    # construction (the split path exists for cameras << cores), so hash
+    # routing is balanced by volume; an explicit repartition is exempt
+    # from AQE's byte-based coalescing, which would shrink this
+    # compute-dense stage to a handful of tasks
+    par = cand.sparkSession.sparkContext.defaultParallelism
+    partials = (cand.repartition(4 * par, "camera_id", "_sub")
+                .groupBy("camera_id", "_sub")
+                .applyInPandas(render_partial, schema=_PARTIAL_SCHEMA))
 
     def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cam_id = int(key[0])
@@ -694,7 +664,7 @@ def render_label_images(
     cand = candidate_camera_faces(
         cameras, faces_with_class, res=res, z_range=z_range).select(
         "camera_id", "face_id", class_col, *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
+    bc = _broadcast_camera_params(cameras)
     schema = T.StructType([
         T.StructField("camera_id", T.LongType()),
         T.StructField("w", T.IntegerType()),
@@ -747,7 +717,7 @@ def render_face_images(
     cand = candidate_camera_faces(
         cameras, faces, res=res, z_range=z_range).select(
         "camera_id", "face_id", *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
+    bc = _broadcast_camera_params(cameras)
     schema = T.StructType([
         T.StructField("camera_id", T.LongType()),
         T.StructField("w", T.IntegerType()),

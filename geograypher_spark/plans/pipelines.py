@@ -1,8 +1,9 @@
 """End-to-end pipeline compositions (the reference's CLI entrypoints).
 
 Each pipeline is a declarative DataFrame plan — Catalyst owns predicate
-pushdown / join ordering; we own the spatial-candidate generation, salting
-and the Arrow kernels.
+pushdown / join ordering and AQE handles join skew; we own the
+spatial-candidate generation, the balanced render exchanges and the Arrow
+kernels.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..operators import aggregates as A
 from ..operators import spatial_join as SJ
@@ -40,7 +42,6 @@ def label_polygons(
     class_col: str = "class_id",
     res: int = SJ.DEFAULT_RES,
     use_slope_weight: bool = True,
-    salt_factor: int | None = None,
 ) -> DataFrame:
     """The minimum end-to-end query (SURVEY §7 step 2): assign each polygon
     the class whose faces cover the most (slope-corrected) area inside it.
@@ -55,10 +56,7 @@ def label_polygons(
     f = faces.filter(F.col(class_col).isNotNull())  # F4 finite-label mask
     overlap = SJ.triangles_polygon_overlap(
         f.select("face_id", "x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2", class_col),
-        polygons.select("polygon_id", "geometry_wkb"),
-        res=res, salt_factor=salt_factor,
-        broadcast_covering=salt_factor is None,
-    )
+        polygons.select("polygon_id", "geometry_wkb"), res=res)
     weight = F.col("overlap_area") * (slope_ratio_col() if use_slope_weight else F.lit(1.0))
     weighted = overlap.withColumn("weight", weight)
     return A.weighted_argmax(weighted, ["polygon_id"], class_col, "weight")
@@ -81,19 +79,20 @@ def aggregate_images(
     Returns (face_id, pred_class, total_weight, n_cameras).
     """
     valid = pixel_classes.filter(F.col("class_id").isNotNull())
-    counts = (
-        valid.groupBy("face_id", "class_id")
-        .agg(F.sum("pixel_count").alias("w"))
-    )
     # observations are per FACE across all classes — a face seen by two
     # cameras voting for different classes has n_cameras=2, not max(1,1)
-    # (reference counts valid projections per face, meshes.py:2010-2031)
-    obs = valid.groupBy("face_id").agg(
-        F.countDistinct("camera_id").alias("n_cameras"))
-    pred = A.weighted_argmax(counts, ["face_id"], "class_id", "w")
+    # (reference counts valid projections per face, meshes.py:2010-2031).
+    # A face-keyed window puts the count on every row, so ONE aggregation
+    # reads the input (a second groupBy joined back would re-run the
+    # upstream render for its own branch); n_cameras is a function of
+    # face_id, so grouping by it as well splits no group.
+    n_cameras = F.size(F.collect_set("camera_id").over(
+        Window.partitionBy("face_id"))).cast("long")
+    pred = A.weighted_argmax(valid.withColumn("n_cameras", n_cameras),
+                             ["face_id", "n_cameras"], "class_id",
+                             "pixel_count")
     return (
-        pred.join(obs, "face_id")
-        .filter(F.col("n_cameras") >= min_observations)
+        pred.filter(F.col("n_cameras") >= min_observations)
         .select("face_id", "pred_class", "total_weight", "n_cameras")
     )
 
@@ -213,9 +212,9 @@ def multiview_detections_pipeline(
     from ..functions import camera as cam_fn
     from ..operators.raytri import (connected_components, ray_proximity_edges,
                                     triangulate_components)
-    from ..operators.visibility import _broadcast_cameras
+    from ..operators.visibility import _broadcast_camera_params
 
-    bc = _broadcast_cameras(cameras)
+    bc = _broadcast_camera_params(cameras)
     schema = T.StructType([
         T.StructField("ray_id", T.LongType()),
         T.StructField("camera_id", T.LongType()),

@@ -156,7 +156,7 @@ def sq_rasterize_big(spark, sf_dir):
         ((i + 2 * j + F.col("up") + F.col("layer")) % 7).alias("class_id"))
     grid = TL.TileGrid(x0=-0.001, y0=160.001, gsd=0.008, tile_px=512)
     # field extent is known by construction ([0, G*CELL + CELL/3]²) —
-    # passing bounds lets the balanced exchange skip the group-probe
+    # passing bounds gives the tile-key domain without the min/max
     # action that would re-scan the generated faces lineage
     ext = G * CELL + CELL / 3.0
     return TL.rasterize_face_labels(faces, grid, bounds=(0.0, 0.0, ext, ext))

@@ -22,7 +22,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
@@ -72,7 +72,6 @@ def get_spark(
         n = os.cpu_count() or 8
         shuffle_partitions = min(64, max(8, n))
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.sql.execution.arrow.maxRecordsPerBatch"] = "65536"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

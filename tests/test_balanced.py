@@ -53,6 +53,12 @@ def _make_agg():
     return _agg
 
 
+def _groups(n_groups, extra_groups=0):
+    """The (g, h) key domain of ``_mkdf`` plus ``extra_groups`` keys that
+    have no rows."""
+    return [(g, g % 5) for g in range(n_groups + extra_groups)]
+
+
 def _mkdf(spark, n_groups, rows_per_group=7):
     pdf = pd.DataFrame({
         "g": np.repeat(np.arange(n_groups, dtype=np.int64), rows_per_group),
@@ -66,8 +72,8 @@ def _mkdf(spark, n_groups, rows_per_group=7):
 
 class TestGroupedApplyBalanced:
     @pytest.mark.parametrize("n_groups,kwargs", [
-        (23, {}),                                   # enumeration regime
-        (23, {"max_enumerated_groups": 5}),         # forced volume regime
+        (23, {}),                                   # exact key domain
+        (23, {"extra_groups": 9}),                  # superset domain
         (1, {}),
     ])
     def test_matches_apply_in_pandas(self, spark, n_groups, kwargs):
@@ -75,7 +81,8 @@ class TestGroupedApplyBalanced:
         _agg = _make_agg()
         want = (df.groupBy("g", "h").applyInPandas(_agg, schema=SCHEMA)
                 .toPandas().sort_values(["g", "h"]).reset_index(drop=True))
-        got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA, **kwargs)
+        got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA,
+                                      _groups(n_groups, **kwargs))
                .toPandas().sort_values(["g", "h"]).reset_index(drop=True))
         pd.testing.assert_frame_equal(got, want)
 
@@ -107,7 +114,8 @@ class TestGroupedApplyBalanced:
                 "g": [-1.0 if key[0] is None else float(key[0])],
                 "total": [float(p["x"].sum())], "n": [len(p)]})
 
-        got = (grouped_apply_balanced(df, ["g"], agg, schema)
+        got = (grouped_apply_balanced(df, ["g"], agg, schema,
+                                      [(1.0,), (2.0,), (None,)])
                .toPandas().sort_values("g").reset_index(drop=True))
         assert got["g"].tolist() == [-1.0, 1.0, 2.0]
         assert got["total"].tolist() == [12.0, 3.0, 16.0]
@@ -123,22 +131,24 @@ class TestGroupedApplyBalanced:
             lambda key, p: pd.DataFrame(
                 {"g": [key[0]], "h": [key[1]], "total": [0.0],
                  "n": [1 if list(p.columns) == ["x", "h", "g"] else 0]}),
-            SCHEMA).toPandas()
+            SCHEMA, _groups(6)).toPandas()
         assert out["n"].tolist() == [1] * 6
 
     def test_group_spanning_batch_boundary(self, spark):
         """The streaming run-carver must reassemble a group whose rows
-        arrive split across Arrow batches."""
+        arrive split across Arrow batches. With more groups than buckets
+        every partition holds several groups back to back."""
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
         try:
-            df = _mkdf(spark, 4, rows_per_group=50).coalesce(1)
+            n_groups = 3 * max(spark.sparkContext.defaultParallelism * 4, 8)
+            df = _mkdf(spark, n_groups, rows_per_group=50).coalesce(1)
             _agg = _make_agg()
             want = (df.groupBy("g", "h").applyInPandas(_agg, schema=SCHEMA)
                     .toPandas().sort_values(["g", "h"])
                     .reset_index(drop=True))
             got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA,
-                                          partitions=2)
+                                          _groups(n_groups))
                    .toPandas().sort_values(["g", "h"])
                    .reset_index(drop=True))
             pd.testing.assert_frame_equal(got, want)
@@ -148,7 +158,8 @@ class TestGroupedApplyBalanced:
 
     def test_empty_input(self, spark):
         df = _mkdf(spark, 3).filter("g > 100")
-        out = grouped_apply_balanced(df, ["g", "h"], _make_agg(), SCHEMA)
+        out = grouped_apply_balanced(df, ["g", "h"], _make_agg(), SCHEMA,
+                                     _groups(3))
         assert out.count() == 0
         assert out.schema == SCHEMA
 

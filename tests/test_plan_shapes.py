@@ -86,6 +86,14 @@ def test_render_labels_plan_sane(spark, queries):
         plan[:2000]
 
 
+def test_forward_pipeline_renders_once(spark, queries):
+    """aggregate_images must read the visibility output once: a second
+    aggregation branch over the same rows re-runs the render MapInPandas
+    above a reused exchange (the render itself is not reused)."""
+    plan = _plan(queries["forward_pipeline"](spark, SF_DIR))
+    assert plan.count("MapInPandas") == 1, plan[:3000]
+
+
 def test_simhash_no_dedup_exchange(spark):
     """simhash_near_pairs attributes each pair to its FIRST matching
     block (round-4): reintroducing a dropDuplicates over (id_a, id_b)

@@ -1,6 +1,6 @@
 """Robustness batch: streaming watermark agg, overlay normalization, CRS
-pUDF wrappers, scale-query smoke, checkpoint via submit path, salting
-equivalence on the triangle overlap join."""
+pUDF wrappers, scale-query smoke, checkpoint via submit path,
+broadcast-vs-shuffle join equivalence (triangle overlap, skewed points)."""
 
 import numpy as np
 import pandas as pd
@@ -80,7 +80,7 @@ def test_scale_queries_smoke(spark):
         assert q(spark, "/root/testdata/sf0.001").count() > 0, name
 
 
-def test_triangle_overlap_salted_equivalence(spark, scene):
+def test_triangle_overlap_broadcast_shuffle_equivalence(spark, scene):
     from geograypher_spark.operators import spatial_join as SJ
     from geograypher_spark.sources.scene import scene_to_spark
 
@@ -88,45 +88,31 @@ def test_triangle_overlap_salted_equivalence(spark, scene):
     fsel = faces.select("face_id", "x0", "y0", "z0", "x1", "y1", "z1",
                         "x2", "y2", "z2", "class_id")
     psel = polys.select("polygon_id", "geometry_wkb")
-    plain = SJ.triangles_polygon_overlap(fsel, psel)
-    salted = SJ.triangles_polygon_overlap(
-        fsel, psel, broadcast_covering=False, salt_factor=4)
+    bcast = SJ.triangles_polygon_overlap(fsel, psel)
+    shuffled = SJ.triangles_polygon_overlap(
+        fsel, psel, broadcast_covering=False)
     a = {(r["face_id"], r["polygon_id"]): round(r["overlap_area"], 12)
-         for r in plain.collect()}
+         for r in bcast.collect()}
     b = {(r["face_id"], r["polygon_id"]): round(r["overlap_area"], 12)
-         for r in salted.collect()}
-    assert a == b
+         for r in shuffled.collect()}
+    assert a and a == b
 
 
-def test_choose_salt_factor_detects_skew(spark):
-    from geograypher_spark.operators.spatial_join import (
-        choose_salt_factor, with_cell)
+def test_skewed_shuffle_join_matches_broadcast(spark):
+    """90% of points in one 8 m cell (a dense forest plot): the
+    shuffle-join path returns exactly the broadcast path's rows."""
+    from geograypher_spark.operators.spatial_join import points_in_polygons
+    from geograypher_spark.functions import geometry as geom
 
-    # uniform points → no salting
-    uniform = spark.range(100_000).select(
-        ((F.col("id") * 7919 % 10000) / 100.0).alias("x"),
-        ((F.col("id") * 104729 % 10000) / 100.0).alias("y"))
-    assert choose_salt_factor(with_cell(uniform), target_rows_per_task=5000) == 1
-
-    # 90% of points in one 8m cell (a dense forest plot) → salted
     skewed = spark.range(100_000).select(
         F.when(F.col("id") % 10 > 0, 1.0)
         .otherwise((F.col("id") * 7919 % 10000) / 100.0).alias("x"),
         F.when(F.col("id") % 10 > 0, 1.0)
         .otherwise((F.col("id") * 104729 % 10000) / 100.0).alias("y"))
-    sf = choose_salt_factor(with_cell(skewed), target_rows_per_task=5000)
-    assert sf >= 8
-
-    # salted join equals unsalted on the skewed data
-    from geograypher_spark.operators.spatial_join import points_in_polygons
-    from geograypher_spark.functions import geometry as geom
-    import pandas as pd
-
     wkb = geom.polygon_to_wkb([geom.rect_ring(0.0, 0.0, 50.0, 50.0)])
     polys = spark.createDataFrame(pd.DataFrame({
         "polygon_id": pd.Series([1], dtype="int64"), "geometry_wkb": [wkb]}))
     pts = skewed.withColumn("pid", F.monotonically_increasing_id())
     a = points_in_polygons(pts, polys).count()
-    b = points_in_polygons(pts, polys, broadcast_covering=False,
-                           salt_factor=sf).count()
-    assert a == b
+    b = points_in_polygons(pts, polys, broadcast_covering=False).count()
+    assert a == b > 90_000

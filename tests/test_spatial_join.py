@@ -52,15 +52,15 @@ def test_points_in_polygons_matches_bruteforce(spark, scene):
     assert len(got) > 0
 
 
-def test_salted_join_same_result(spark, scene):
+def test_broadcast_and_shuffle_join_same_result(spark, scene):
     verts, faces, polys, cams = scene_to_spark(spark, scene)
     pts = faces.select("face_id", F.col("cx").alias("x"), F.col("cy").alias("y"))
     pg = polys.select("polygon_id", "geometry_wkb")
-    plain = SJ.points_in_polygons(pts, pg)
-    salted = SJ.points_in_polygons(pts, pg, broadcast_covering=False, salt_factor=4)
-    a = {(r["face_id"], r["polygon_id"]) for r in plain.collect()}
-    b = {(r["face_id"], r["polygon_id"]) for r in salted.collect()}
-    assert a == b
+    bcast = SJ.points_in_polygons(pts, pg)
+    shuffled = SJ.points_in_polygons(pts, pg, broadcast_covering=False)
+    a = {(r["face_id"], r["polygon_id"]) for r in bcast.collect()}
+    b = {(r["face_id"], r["polygon_id"]) for r in shuffled.collect()}
+    assert a == b == brute_force_pip(scene)
 
 
 def test_covering_cells_superset_of_hits(spark, scene):

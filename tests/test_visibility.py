@@ -126,6 +126,18 @@ def test_occlusion_nearer_face_wins(spark):
     assert ground_only[0] + ground_only[1] == 190 * 190
 
 
+def test_camera_collect_cap_raises(spark, monkeypatch):
+    """A camera table over the driver-collect cap fails loudly, naming
+    the cap, instead of being pulled whole onto the driver."""
+    monkeypatch.setattr(V, "_MAX_COLLECTED_CAMERAS", 1)
+    two = camera_df(spark).unionByName(
+        camera_df(spark, x=0.5).withColumn("camera_id", F.lit(1).cast("long")))
+    verts, tris = flat_mesh_tables()
+    with pytest.raises(ValueError, match="more than 1 rows"):
+        V.visibility_join(two, faces_df(spark, verts, tris[:2]),
+                          z_range=(0.0, 0.0))
+
+
 def test_camera_footprint_prunes_far_faces(spark):
     """Candidate join must exclude faces far outside the frustum footprint."""
     verts, tris = flat_mesh_tables()
